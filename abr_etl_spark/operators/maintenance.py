@@ -19,6 +19,22 @@ from pyspark.sql import functions as F
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # cluster-friendly parquet file size
 
 
+def _data_files(path: str) -> list[str]:
+    """The parquet data files directly under ``path`` (hidden checksum
+    and ``_``-prefixed bookkeeping files excluded)."""
+    import glob
+    import os
+
+    return sorted(
+        {
+            f
+            for pat in ("*.parquet", "part-*")
+            for f in glob.glob(os.path.join(path, pat))
+            if os.path.isfile(f) and not f.endswith(".crc")
+        }
+    )
+
+
 def compact_partition(
     spark: SparkSession,
     path: str,
@@ -28,22 +44,20 @@ def compact_partition(
     """Rewrite a lake partition directory into ~target-sized files.
 
     Sizes the output file count from the actual input bytes (cheap
-    filesystem listing, no data read), then rewrites via a temp dir so a
-    crash never leaves the partition half-compacted. Returns the new file
+    filesystem listing, no data read). A single file below target is
+    left as it is -- no read, no job (a merge_snapshot bucket below
+    target lands as one file). Otherwise it rewrites via a temp dir so a
+    crash never leaves the partition half-compacted. Returns the file
     count. Run per-partition (importdate=...), never on the whole table.
     """
-    import glob
     import os
     import shutil
 
-    files = [
-        f
-        for f in glob.glob(os.path.join(path, "*.parquet"))
-        + glob.glob(os.path.join(path, "part-*"))
-        if os.path.isfile(f)
-    ]
-    total = sum(os.path.getsize(f) for f in set(files))
+    files = _data_files(path)
+    total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, -(-total // target_file_bytes))  # ceil div
+    if n_out == 1 and len(files) == 1:
+        return 1
     df = spark.read.parquet(path)
     tmp = path.rstrip("/") + "__compacting"
     # n_out == 1 (the common weekly-bucket case): coalesce merges the
@@ -359,16 +373,7 @@ def write_stats_manifest(
     consults the manifest). Stats come from footers only; the read
     fans out over executors past DIST_MANIFEST_MIN files. Returns the
     number of files indexed."""
-    import glob
-    import os
-
-    files = [
-        f
-        for pat in ("part-*", "*.parquet")
-        for f in glob.glob(os.path.join(path, pat))
-        if os.path.isfile(f) and not f.endswith(".crc")
-    ]
-    files = sorted(set(files))
+    files = _data_files(path)
     if files:
         _write_zorder_manifest(path, files, cols, spark=spark)
     return len(files)
@@ -422,6 +427,44 @@ def _read_mark(path: str, b: int) -> int | None:
 
 def _bucket_expr(key: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
+
+
+def _write_buckets(
+    frame: DataFrame, dest: str, key: str, bucket_bytes: int
+) -> None:
+    """Write ``frame`` partitioned by bucket through an exchange on the
+    bucket id, which hands a bucket's rows to one task: a bucket below
+    TARGET_FILE_BYTES lands as ONE file and compact_partition has
+    nothing to do. ``bucket_bytes`` (an estimate of one bucket's on-disk
+    size: the largest pending bucket, or a bootstrap's input bytes per
+    bucket) sets a salt of ceil(bytes / target): each bucket spreads
+    over up to that many tasks, so no one task writes a whole 25 GB
+    bucket at scale, and compaction re-tiles those buckets. The salt
+    hashes the key with murmur3, not the bucket's xxhash64, so it stays
+    independent of the bucket id whatever the bucket count."""
+    salt = max(1, -(-int(bucket_bytes) // TARGET_FILE_BYTES))
+    frame.repartition(
+        F.col(_BUCKET_COL), F.pmod(F.hash(F.col(key)), F.lit(salt))
+    ).write.partitionBy(_BUCKET_COL).parquet(dest)
+
+
+def _input_bytes(frame: DataFrame) -> int:
+    """On-disk bytes of the local files ``frame`` scans -- the plan's
+    file listing (``inputFiles``), no job. Every file of a scanned table
+    counts, partition filters or not, so this errs high; a frame with no
+    file source, or one read through a cache, gives 0."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    total = 0
+    for uri in frame.inputFiles():
+        u = urlparse(uri)
+        if u.scheme in ("", "file"):
+            try:
+                total += os.path.getsize(unquote(u.path))
+            except OSError:
+                pass
+    return total
 
 
 def _acquire_writer_lock(path: str, *, tag: str = "") -> str:
@@ -573,9 +616,10 @@ def _merge_snapshot_locked(
 
     Scale shape: one partition-pruned scan of the affected buckets, one
     anti-join against the (small) delta key set -- AQE broadcasts it in
-    the common deltas<<snapshot case -- and a bucket-local rewrite.
-    Untouched buckets are never read; a fully-replayed epoch reads no
-    buckets at all.
+    the common deltas<<snapshot case -- and a bucket-local rewrite
+    through one exchange on the bucket id (``_write_buckets``), so every
+    bucket lands already compact. Untouched buckets are never read; a
+    fully-replayed epoch reads no buckets at all.
 
     Returns ``{"written": w, "skipped": s, "cleared": c}`` bucket
     counts.
@@ -595,7 +639,11 @@ def _merge_snapshot_locked(
                 f"merge_snapshot: NULL values in key column {key!r} -- "
                 "the upsert contract requires non-null keys"
             )
-        stamped.write.partitionBy(_BUCKET_COL).parquet(path)
+        # no bucket exists on disk yet: size the salt by the input's
+        # files spread over the buckets
+        _write_buckets(
+            stamped, path, key, _input_bytes(upserts) // n_buckets
+        )
         # the partitionBy write already materialized one dir per
         # bucket -- list them instead of re-running the upsert lineage
         # through a distinct().collect() (r16: one less evaluation of
@@ -750,7 +798,11 @@ def _merge_snapshot_locked(
         merged = survivors.unionByName(fresh)
     else:
         merged = fresh
-    merged.write.partitionBy(_BUCKET_COL).parquet(staging)
+    largest = max(
+        (sum(map(os.path.getsize, _data_files(d))) for d in pending_dirs),
+        default=0,
+    )
+    _write_buckets(merged, staging, key, largest)
     written, cleared = _commit_staging(path, staging, epoch, pending)
     assert written + cleared == len(pending)
     return {"written": written, "skipped": len(done), "cleared": cleared}

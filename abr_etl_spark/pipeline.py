@@ -3,9 +3,9 @@
 
     kill-switch check -> routed ingest -> per-dataset transform ->
     partitioned lake write -> (per-dataset post actions) delta ->
-    stable-named CSV export -> CDC apply (merge_snapshot current-state
-    table, bootstrapped from the first snapshot) -> per-bucket
-    compaction of exactly the buckets the week rewrote
+    CDC apply (merge_snapshot current-state table, bootstrapped from the
+    first snapshot) -> per-bucket compaction of the buckets the week
+    rewrote past target -> stable-named CSV export
 
 Transport concerns (SFTP download, S3 sync, CloudWatch) are out of engine
 scope -- the data path is complete. The kill switch mirrors the
@@ -15,6 +15,8 @@ marker file.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import logging
 import os
 from dataclasses import dataclass, field
@@ -58,10 +60,11 @@ class WeeklyConfig:
     #: hash-bucket count for the merged tables (tests shrink it; at
     #: scale see maintenance.MERGE_BUCKETS sizing note).
     merge_buckets: int = maintenance.MERGE_BUCKETS
-    #: after a merge, compact exactly the buckets THIS epoch rewrote
-    #: (marker == epoch) back to ~target-sized files -- the weekly
-    #: small-file hygiene pass, scoped so untouched buckets never
-    #: rewrite.
+    #: after a merge, check exactly the buckets THIS epoch rewrote
+    #: (marker == epoch) against ~target-sized files. The merge already
+    #: writes each bucket below target as one file, so only a bucket
+    #: that grew past target is re-tiled; untouched buckets are never
+    #: looked at.
     compact_merged: bool = False
     results: dict = field(default_factory=dict)
 
@@ -143,20 +146,14 @@ def raw_gz_passthrough(drop_dir: str, raw_root: str) -> dict[str, str]:
     import shutil
 
     written: dict[str, str] = {}
-    for name in sorted(os.listdir(drop_dir)):
-        routed = routed_ingest.match_dataset(name)
-        if routed is None:
-            continue
-        ds, yymmdd = routed
-        date = f"20{yymmdd[:2]}-{yymmdd[2:4]}-{yymmdd[4:6]}"
-        out_dir = os.path.join(raw_root, "DATA", ds, f"importdate={date}")
-        os.makedirs(out_dir, exist_ok=True)
-        out_path = os.path.join(out_dir, f"ABR_{ds}.txt.gz")
-        with open(os.path.join(drop_dir, name), "rb") as src, gzip.open(
-            out_path, "wb"
-        ) as dst:
-            shutil.copyfileobj(src, dst)
-        written[ds] = out_path
+    for ds, files in routed_ingest.drop_snapshots(drop_dir).items():
+        for date, src_path in files.items():
+            out_dir = os.path.join(raw_root, "DATA", ds, f"importdate={date}")
+            os.makedirs(out_dir, exist_ok=True)
+            out_path = os.path.join(out_dir, f"ABR_{ds}.txt.gz")
+            with open(src_path, "rb") as src, gzip.open(out_path, "wb") as dst:
+                shutil.copyfileobj(src, dst)
+            written[ds] = out_path
     return written
 
 
@@ -180,7 +177,8 @@ def _merge_and_compact(
 ) -> dict:
     """Apply one week's CDC to <merge_dir>/<ds> (epoch = yyyymmdd as
     int, so replays gate on the bucket markers) and, when configured,
-    compact exactly the buckets this epoch rewrote."""
+    pass exactly the buckets this epoch rewrote to compact_partition,
+    which leaves a bucket written as one file below target unread."""
     path = os.path.join(cfg.merge_dir, ds)
     epoch = int(date.replace("-", ""))
     rep = maintenance.merge_snapshot(
@@ -242,14 +240,23 @@ def _merge_and_compact(
     return rep
 
 
+#: flag column of the classified CDC frame: True for an added key, False
+#: for an updated one
+_ADDED = "__added"
+
+
 def _weekly_cdc(
     new_df: DataFrame, old_df: DataFrame, key: str
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """(updated, added, upserts, removed_keys) for one snapshot pair.
+) -> tuple[DataFrame, DataFrame]:
+    """(changed, removed_keys) for one snapshot pair, both persisted --
+    the caller unpersists them.
 
-    ONE left-outer classify join serves updated, added and the merge's
-    upsert frame (r16 verdict item 8, adjusted after paired A/B runs):
-    all three are filters of new LEFT JOIN old-(key, hash), and a left
+    ONE left-outer classify join (r16 verdict item 8, adjusted after
+    paired A/B runs): ``changed`` is new LEFT JOIN old-(key, hash)
+    filtered to the rows whose hash differs, with ``_ADDED`` telling
+    added keys (no old hash) from updated ones. The merge's upserts and
+    the UPDATED and ADDED exports are all projections of it, so the
+    join runs once per week however many consumers read it. A left
     join keeps the broadcast-hash strategy AQE picks when the narrow
     old side fits. The full-outer delta_wide_classify variant was
     built, property-tested, and MEASURED SLOWER here (weekly medians
@@ -265,22 +272,69 @@ def _weekly_cdc(
         on=key,
         how="left_outer",
     )
-    differs = F.col("__h_old").isNull() | (
-        F.col("__h_new") != F.col("__h_old")
-    )
-    updated = lj.where(F.col("__h_old").isNotNull() & differs).select(
-        *new_df.columns
-    )
-    added = lj.where(F.col("__h_old").isNull()).select(*new_df.columns)
-    ups = lj.where(differs).select(
-        *[c for c in new_df.columns if c != "importdate"]
-    )
+    changed = lj.where(
+        F.col("__h_old").isNull() | (F.col("__h_new") != F.col("__h_old"))
+    ).select(*new_df.columns, F.col("__h_old").isNull().alias(_ADDED))
     rem = delta.delta_removed(new_df, old_df, key).select(key)
-    return updated, added, ups, rem
+    return changed.persist(), rem.persist()
+
+
+def _sha256(path: str) -> str:
+    with open(path, "rb") as fh:
+        return hashlib.file_digest(fh, "sha256").hexdigest()
+
+
+def _source_stamp(src: str) -> dict:
+    """What a ``_loaded/<date>`` sidecar records of a drop file."""
+    st = os.stat(src)
+    return {
+        "size": st.st_size,
+        "mtime_ns": st.st_mtime_ns,
+        "sha256": _sha256(src),
+    }
+
+
+def _is_loaded(table_path: str, date: str, src: str) -> bool:
+    """Whether partition ``date`` was written from ``src``'s bytes.
+
+    The file is read (and hashed) only when its sidecar and partition
+    both exist and its size matches but its mtime does not -- a date
+    with no sidecar is to-do anyway, and an untouched file is judged by
+    its (size, mtime_ns) stamp alone."""
+    if not os.path.isdir(os.path.join(table_path, f"importdate={date}")):
+        return False
+    try:
+        with open(os.path.join(table_path, "_loaded", date)) as fh:
+            stamp = json.load(fh)
+    except (FileNotFoundError, ValueError):
+        return False
+    st = os.stat(src)
+    if st.st_size != stamp["size"]:
+        return False
+    if st.st_mtime_ns == stamp["mtime_ns"]:
+        return True
+    return _sha256(src) == stamp["sha256"]
+
+
+def _mark_loaded(table_path: str, date: str, stamp: dict) -> None:
+    """Record the source stamp of a committed partition write (tmp +
+    rename, so a crash never leaves a torn sidecar)."""
+    d = os.path.join(table_path, "_loaded")
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{date}.tmp")
+    with open(tmp, "w") as fh:
+        json.dump(stamp, fh)
+    os.replace(tmp, os.path.join(d, date))
 
 
 def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
-    """Execute the weekly flow; per-dataset results land in cfg.results."""
+    """Execute the weekly flow; per-dataset results land in cfg.results.
+
+    Replaying a drop leaves the lake untouched: a partition whose
+    ``_loaded/<date>`` sidecar matches this drop's source file (same
+    size and mtime, or same sha256) is neither re-ingested nor
+    rewritten, and a re-drop with different bytes rewrites just that
+    partition."""
     check_disabled(cfg.lake_root)
 
     if cfg.zip_path:
@@ -291,24 +345,43 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
             cfg.drop_dir, os.path.join(cfg.lake_root, "RAW")
         )
 
+    snapshots = routed_ingest.drop_snapshots(cfg.drop_dir)
     for ds in cfg.datasets:
-        try:
-            df = routed_ingest.ingest_delimited(
-                spark, cfg.drop_dir, ds, sep=cfg.sep
-            )
-        except Exception as exc:  # analysis error when no files match
-            log.info("dataset %s: no files in drop (%s)", ds, exc)
-            continue
-        df = maintenance.apply_transform(ds, df)
         table_path = os.path.join(cfg.lake_root, "DATA", ds)
-        lake.write_partitioned(df, table_path)
-        cfg.results[ds] = {"table_path": table_path}
+        files = snapshots.get(ds, {})
+        if not files:
+            log.info("dataset %s: no files in drop", ds)
+            continue
+        todo = {
+            d: f for d, f in files.items() if not _is_loaded(table_path, d, f)
+        }
+        if todo:
+            # stamp the sources before reading them, so a file replaced
+            # mid-run is judged again next week
+            stamps = {d: _source_stamp(f) for d, f in todo.items()}
+            try:
+                df = routed_ingest.ingest_delimited(
+                    spark, cfg.drop_dir, ds, sep=cfg.sep
+                )
+            except Exception as exc:  # analysis error on an unreadable drop
+                log.info("dataset %s: ingest failed (%s)", ds, exc)
+                continue
+            df = maintenance.apply_transform(ds, df)
+            if len(todo) < len(files):
+                df = df.where(
+                    F.col("importdate").cast("string").isin(list(todo))
+                )
+            # dynamic overwrite: replaces just the partitions written
+            lake.write_partitioned(df, table_path, mode="overwrite")
+            for d, stamp in stamps.items():
+                _mark_loaded(table_path, d, stamp)
+        cfg.results[ds] = {"table_path": table_path, "loaded": sorted(todo)}
 
         if ds not in cfg.delta_datasets:
             continue
         table = lake.read_lake(spark, table_path)
         try:
-            newest, previous = lake.newest_previous(table)
+            newest, previous = lake.newest_previous(table_path)
         except ValueError as exc:
             log.info("dataset %s: %s", ds, exc)
             if cfg.merge_dir:
@@ -326,35 +399,38 @@ def run_weekly(spark: SparkSession, cfg: WeeklyConfig) -> WeeklyConfig:
         new_df, old_df = delta.snapshot_pair(
             table, cfg.key_col, newest=newest, previous=previous
         )
-        updated, added, ups, rem = _weekly_cdc(new_df, old_df, cfg.key_col)
         cfg.results[ds].update(
             {"newest": newest, "previous": previous}
         )
-        if cfg.merge_dir:
-            # merge_snapshot evaluates the upsert frame twice (bucket
-            # stats collect, then the staging write) and the removed
-            # keys once more inside the survivor anti-join; persisting
-            # the two delta frames turns those re-evaluations into
-            # cache reads (bounded: deltas are the week's changed rows,
-            # released right after the merge).
-            ups = ups.persist()
-            rem = rem.persist()
-            try:
+        # The classified frame is computed once and read three times
+        # (merge_snapshot's bucket stats and staging write, then the two
+        # exports); the removed keys twice (bucket stats, survivor
+        # anti-join). Both hold only the week's changed rows and are
+        # released however the merge or an export ends.
+        changed, rem = _weekly_cdc(new_df, old_df, cfg.key_col)
+        try:
+            if cfg.merge_dir:
+                ups = changed.drop(_ADDED, "importdate")
                 cfg.results[ds]["merge"] = _merge_and_compact(
                     spark, cfg, ds, ups, rem, newest
                 )
-            finally:
-                ups.unpersist()
-                rem.unpersist()
-        if cfg.export_dir:
-            for action, frame in (("updated", updated), ("added", added)):
-                out_dir = os.path.join(
-                    cfg.export_dir,
-                    f"DELTA/{action.upper()}/{ds}/importdate={newest}",
-                )
-                os.makedirs(out_dir, exist_ok=True)
-                path = lake.export_stable_csv(
-                    frame.drop("importdate"), out_dir, f"{ds}_{action}.csv"
-                )
-                cfg.results[ds][f"{action}_csv"] = path
+            if cfg.export_dir:
+                for action, which in (
+                    ("updated", ~F.col(_ADDED)),
+                    ("added", F.col(_ADDED)),
+                ):
+                    out_dir = os.path.join(
+                        cfg.export_dir,
+                        f"DELTA/{action.upper()}/{ds}/importdate={newest}",
+                    )
+                    os.makedirs(out_dir, exist_ok=True)
+                    path = lake.export_stable_csv(
+                        changed.where(which).drop(_ADDED, "importdate"),
+                        out_dir,
+                        f"{ds}_{action}.csv",
+                    )
+                    cfg.results[ds][f"{action}_csv"] = path
+        finally:
+            changed.unpersist()
+            rem.unpersist()
     return cfg

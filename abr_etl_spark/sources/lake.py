@@ -90,7 +90,11 @@ def write_partitioned(
     (load.go:19-36); here the writer emits partition directories
     (``importdate=<date>/``) that any engine -- Spark, Athena/Trino, DuckDB
     -- discovers natively, with columnar compression instead of whole-file
-    gzip. dynamic partitionOverwriteMode only rewrites touched snapshots.
+    gzip. The default ``append`` mode adds ``df``'s rows to the
+    partitions it carries, so writing one snapshot twice doubles it.
+    ``mode="overwrite"`` runs with dynamic partitionOverwriteMode: only
+    the partitions present in ``df`` are replaced, every other snapshot
+    stays as it is (``run_weekly`` writes this way).
     """
     w = df.write.format(fmt).mode(mode).partitionBy(partition_col)
     if compression:

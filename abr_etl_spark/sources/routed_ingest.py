@@ -134,3 +134,22 @@ def match_dataset(filename: str) -> tuple[str, str] | None:
         if m:
             return name, m.group(1)
     return None
+
+
+def drop_snapshots(drop_dir: str) -> dict[str, dict[str, str]]:
+    """dataset -> importdate (``YYYY-MM-DD``) -> path of every file in
+    ``drop_dir`` that ``match_dataset`` routes -- a driver-side listing
+    of the drop folder (names only), no Spark job."""
+    import os
+
+    out: dict[str, dict[str, str]] = {}
+    if not os.path.isdir(drop_dir):
+        return out
+    for name in sorted(os.listdir(drop_dir)):
+        routed = match_dataset(name)
+        if routed is None:
+            continue
+        ds, yymmdd = routed
+        date = f"20{yymmdd[:2]}-{yymmdd[2:4]}-{yymmdd[4:6]}"
+        out.setdefault(ds, {})[date] = os.path.join(drop_dir, name)
+    return out

@@ -87,6 +87,13 @@ def test_lake_roundtrip_and_partition_discovery(spark, tmp_path):
     assert back.count() == 100
     assert lake.discover_partitions(back) == ["2024-01-01", "2024-01-08"]
     assert lake.newest_previous(back) == ("2024-01-08", "2024-01-01")
+    # a rewrite replaces only the partitions it carries, once
+    lake.write_partitioned(
+        df.where(F.col("importdate") == "2024-01-08"), path, mode="overwrite"
+    )
+    again = lake.read_lake(spark, path)
+    assert again.count() == 100
+    assert lake.discover_partitions(again) == ["2024-01-01", "2024-01-08"]
 
 
 def test_newest_previous_requires_two(spark):

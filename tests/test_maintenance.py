@@ -24,6 +24,77 @@ def test_compaction_reduces_file_count(spark, tmp_path):
     assert back.agg(F.sum("v")).first()[0] == df.agg(F.sum("v")).first()[0]
 
 
+def test_compaction_leaves_compact_dir_unread(spark, tmp_path):
+    """A directory already at its target file count is left as it is:
+    same file, same name, nothing read."""
+    import os
+
+    path = str(tmp_path / "one")
+    spark.range(100).coalesce(1).write.parquet(path)
+    before = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+    assert len(before) == 1
+    assert maintenance.compact_partition(spark, path) == 1
+    assert sorted(f for f in os.listdir(path) if f.startswith("part-")) == before
+
+
+def test_salted_merge_then_compaction_tiles_buckets_to_target(
+    spark, tmp_path, monkeypatch
+):
+    """Buckets estimated past TARGET_FILE_BYTES are written by several
+    tasks (the key-hash salt), at the bootstrap (sized from the input's
+    files) and at a later merge (sized from the pending bucket on disk);
+    compaction then re-tiles each bucket to ceil(bytes / target) files
+    and no row is lost or doubled."""
+    import glob
+    import os
+
+    from abr_etl_spark.operators.maintenance import (
+        merge_snapshot,
+        read_merged_snapshot,
+    )
+
+    src = str(tmp_path / "src")
+    spark.range(1, 4001).select(
+        F.col("id").alias("pid"),
+        F.sha2(F.col("id").cast("string"), 256).alias("txt"),
+    ).repartition(4).write.parquet(src)
+    base = spark.read.parquet(src)
+    target = maintenance._input_bytes(base) // 8  # ~4 targets per bucket
+    monkeypatch.setattr(maintenance, "TARGET_FILE_BYTES", target)
+    path = str(tmp_path / "state")
+
+    def buckets():
+        return sorted(glob.glob(os.path.join(path, "__bucket=*")))
+
+    def files(b):
+        return maintenance._data_files(b)
+
+    def compact_all():
+        for b in buckets():
+            size = sum(map(os.path.getsize, files(b)))
+            n = maintenance.compact_partition(
+                spark, b, target_file_bytes=target
+            )
+            assert n == -(-size // target) > 1
+            assert len(files(b)) == n
+
+    def rows():
+        return {tuple(r) for r in read_merged_snapshot(spark, path).collect()}
+
+    merge_snapshot(spark, path, base, None, key="pid", epoch=1, n_buckets=2)
+    assert max(len(files(b)) for b in buckets()) > 1
+    compact_all()
+    want = {(r.pid, r.txt) for r in base.collect()}
+    assert rows() == want
+
+    ups = base.where(F.col("pid") % 10 == 0).withColumn("txt", F.lit("x"))
+    merge_snapshot(spark, path, ups, None, key="pid", epoch=2, n_buckets=2)
+    assert max(len(files(b)) for b in buckets()) > 1
+    compact_all()
+    want = {(k, "x" if k % 10 == 0 else t) for k, t in want}
+    assert rows() == want
+
+
 def test_transform_registry_applies_location_rules(spark):
     df = spark.createDataFrame(
         [("p1", " vic ", "30-00"), ("p2", "nsw", "800")],

@@ -342,43 +342,6 @@ def wj_old(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- weekly CDC formulations (run_weekly's _weekly_cdc hook) ---
-
-
-def _weekly_cdc_threejoin(new_df, old_df, key):
-    """r16 run_weekly CDC: separate updated/added/removed joins."""
-    from abr_etl_spark.operators import delta
-
-    updated = delta.delta_updated(new_df, old_df, key)
-    added = delta.delta_added(new_df, old_df, key)
-    ups = updated.unionByName(added).drop("importdate")
-    rem = delta.delta_removed(new_df, old_df, key).select(key)
-    return updated, added, ups, rem
-
-
-def _run_weekly_once(spark, sf_dir, cdc=None):
-    import bench
-    from abr_etl_spark import pipeline
-
-    orig = pipeline._weekly_cdc
-    if cdc is not None:
-        pipeline._weekly_cdc = cdc
-    try:
-        bench._bench_weekly_pipeline(spark, sf_dir, 1)
-    finally:
-        pipeline._weekly_cdc = orig
-    return spark.range(1)
-
-
-def weekly_old(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _run_weekly_once(spark, sf_dir, _weekly_cdc_threejoin)
-
-
-def weekly_new(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _run_weekly_once(spark, sf_dir)
-
-
-
 # --- minhash_perm_sweep, r16 formulation (array-shipping verify) ---
 from pyspark.sql import Window as _W10
 from abr_etl_spark.plans.llm_pipeline10 import (
